@@ -11,60 +11,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Parsed once with a clear error: "local[*]"-style values are not
-    // usable here because the AQE initialPartitionNum default below
-    // needs a concrete core count.
-    val nCpus = try cpus.toInt catch {
-      case _: NumberFormatException => throw new IllegalArgumentException(
-        s"SPARK_GRAFT_CPUS must be an integer core count, got '$cpus'")
-    }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE can only coalesce partitions DOWN: with initialPartitionNum
-      // unset every exchange is pinned to shuffle.partitions (=cores)
-      // partitions, so partition VOLUME grows linearly with the data.
-      // Over-partitioning 8x and letting AQE coalesce to its 64MB
-      // advisory size makes partition SIZE the bounded quantity at
-      // every scale. Measured (tools/PartsProbe, same-JVM interleaved
-      // A/B on the four heaviest sf10 queries): quiet-host min is
-      // NEUTRAL (0.94-1.04x — the r8 sf3->sf10 "knee" was mostly host
-      // load billed to the bench, q50's quiet min is ~43s under either
-      // setting, not the 77s bench row), but under concurrent load the
-      // medians drop hard (q22 69.9->44.1s, q50 50.8->45.9s): smaller
-      // partitions cut straggler exposure, which is also the
-      // multi-executor argument. SQLConf.numShufflePartitions returns
-      // this value whenever AQE+coalesce are on, so user
-      // repartition(col) exchanges get it too.
-      //
-      // Gated on input size since round 10: on small inputs the fan-out
-      // never materializes a size win (everything coalesces straight
-      // back down) but still pays per-exchange scheduling overhead —
-      // the shipped-ungated knob cost +2.7% on the 17 MB sf0.1 suite
-      // (r8→r9 A/B in SCALE.md). ≥1 GiB keeps it for the scale regime
-      // the knob was built for. SPARK_GRAFT_INIT_PARTS pins it either
-      // way for knob-identical cross-scale bench points.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INIT_PARTS",
-          if (GraftSession.inputBytes(sfDir) >= GraftSession.overPartitionBytes)
-            (8 * nCpus).toString
-          else cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      // collect_list-family aggregations (ObjectHashAggregate) fall back
-      // to sort-based aggregation after 128 distinct keys per partition
-      // by default — measured 2.3x slowdown on the ingest regroup
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "1000000")
-      // Static conf, default 100 entries: 75 queries x several codegen
-      // units each evict the generated-class cache within one sweep, so
-      // under sweep-interleaved reps EVERY rep would pay Janino
-      // recompilation (~0.1-0.3s/query — measured as a systematic
-      // +15% on the suite total). Sized so a full sweep stays resident
-      // and the min-of-N statistic measures steady-state execution.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.batch(inputDir = Some(sfDir))
     spark.sparkContext.setLogLevel("WARN")
 
     def exec(df: DataFrame): Unit =
@@ -77,9 +24,14 @@ object Bench {
     val qs = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
     val errors = scala.collection.mutable.LinkedHashSet.empty[String]
-    // Warm-up pass (untimed): JIT, codegen caches, file listing.
-    qs.foreach { case (_, fn) =>
-      try exec(fn(spark, sfDir)) catch { case _: Throwable => () }
+    def report(name: String, e: Throwable): Unit =
+      System.err.println(s"[bench] $name failed: ${e.getClass.getName}: " +
+        e.getMessage)
+    // Warm-up pass (untimed): JIT, codegen caches, file listing. A
+    // failure here is reported but not counted: only the timed passes
+    // decide `errors`.
+    qs.foreach { case (name, fn) =>
+      try exec(fn(spark, sfDir)) catch { case e: Throwable => report(name, e) }
     }
     // Timed passes, min per query: single-pass numbers swing ±40% from
     // GC/scheduler noise in local mode. Sub-second queries swing the
@@ -88,13 +40,13 @@ object Bench {
     // min-of-3 keeps round-over-round regression detection meaningful
     // at ~1s extra total cost. A throwing query reports -1, never the
     // (small, healthy-looking) time-to-exception.
-    def timed(name: String, fn: (org.apache.spark.sql.SparkSession, String)
-        => DataFrame): Double = {
+    def timed(name: String, fn: (SparkSession, String) => DataFrame)
+        : Double = {
       val t0 = System.nanoTime()
       try {
         exec(fn(spark, sfDir))
         (System.nanoTime() - t0) / 1e9
-      } catch { case _: Throwable => errors += name; -1.0 }
+      } catch { case e: Throwable => report(name, e); errors += name; -1.0 }
     }
     // Reps are spread across full SWEEPS (rep 1 of every query, then
     // rep 2 of every query, ...) instead of run consecutively: host-load
@@ -148,7 +100,7 @@ object Bench {
     val maintS = graft.testqueries.LayoutQueries
       .maintGateMillis.get() / 1000.0
     // Executed-scale evidence rides along: if a round produced an sf1
-    // bench artifact (tools/sf1_gate.sh -> bench_sf1.json), inline it
+    // bench artifact (`tools/gate.sh sf1 10` -> bench_sf1.json), inline it
     // so the round's single BENCH json also carries the 10x section —
     // without making the per-round default run pay the sf1 wall time.
     // Resolved relative to the working directory (not a hardcoded
@@ -196,7 +148,7 @@ object Bench {
     // the RATIO still sits near 1 there — the sf1 matrix point is where
     // parallelism separates; see OPTIMIZATION_r13.md.)
     val par = spark.sparkContext.defaultParallelism
-    val cpuJson = s""""cpus":$nCpus,"default_parallelism":$par,"master":"local[$cpus]""""
+    val cpuJson = s""""cpus":${GraftSession.cpus},"default_parallelism":$par,"master":"${spark.sparkContext.master}""""
     val core =
       s"""{"metric":"total","value":$total,"unit":"sec","run_at":"$runAt",$cpuJson,$knobs,"queries":$qjson,"q58_gate_s":$gateS,"maint_gate_s":$maintS,"errors":$errJson,"sf":"$sfDir""""
     // stdout gets a MINIMAL final line: totals + error count + the top-5

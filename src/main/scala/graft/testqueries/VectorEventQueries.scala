@@ -361,7 +361,7 @@ object VectorEventQueries {
     // (q116's seed → Lloyd×2 → exact micro-unit means), computes the
     // same masses, evaluates the same EXACT-INTEGER threshold
     // (10·nCells·Σm² ≥ 15·T², all BIGINT — threshold 1.5 measured in
-    // tools/AnnSkewProbe), and emits whichever branch the statistic
+    // commit 348a23d), and emits whichever branch the statistic
     // selects — so engine and oracle cannot disagree on the path, let
     // alone the rows. On the isotropic testdata embeddings the skew is
     // ~1.01 ⇒ both take the int8 branch; the clustered⇒IVF side is

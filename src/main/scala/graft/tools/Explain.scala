@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Prints formatted physical plans for selected catalog queries —
   * the SURVEY-mandated plan review (pushdown, broadcast, shuffle count).
@@ -13,14 +12,11 @@ import org.apache.spark.sql.SparkSession
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val d = "/root/testdata/sf0.01"
+    val spark = graft.GraftSession.batch(inputDir = Some(d))
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSet else Set.empty[String]
     val executed = sys.env.get("GRAFT_EXPLAIN_EXECUTED").contains("1")
-    val d = "/root/testdata/sf0.01"
     graft.testqueries.Registry.all
       .filter(q => names.isEmpty || names(q.name))
       .foreach { q =>

@@ -13,21 +13,10 @@ import graft.queries.CanonicalQueries
   */
 object ProblemBench {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val parts = sys.env.getOrElse("SPARK_GRAFT_PB_PARTS", "1")
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_PB_AQE", "false")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      // per-problem queries touch ONE pruned partition (~600-25k rows):
-      // shuffle parallelism sized to the pruned data, not the cluster —
-      // 32-task stages would be pure scheduler overhead here — and AQE
-      // off (its per-exchange re-plan + materialization is fixed latency
-      // with nothing to adapt at this size; the batch path keeps it on)
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "1000000")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    // per-problem queries touch ONE pruned partition (~600-25k rows):
+    // the interactive profile sizes shuffle parallelism to the pruned
+    // data, not the cluster, and turns AQE off
+    val spark = graft.GraftSession.interactive()
     spark.sparkContext.setLogLevel("WARN")
 
     // build the lakehouse once (same synthesis as IngestBench). With

@@ -25,11 +25,7 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     val Array(srcDir, dstDir, copiesS) = args
     val copies = copiesS.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.batch(inputDir = Some(srcDir))
     spark.sparkContext.setLogLevel("WARN")
 
     // key-space stride per table: dense 0-based keys in the source, so

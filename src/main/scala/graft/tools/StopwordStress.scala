@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Adversarial memory test for the inverted index's posting cap
@@ -25,9 +24,7 @@ import org.apache.spark.sql.functions._
 object StopwordStress {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(50000000L)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.batch()
     spark.sparkContext.setLogLevel("WARN")
     // every doc: the stopword + a mostly-unique tail term, so one term
     // has df = n while the long tail keeps the term dictionary honest

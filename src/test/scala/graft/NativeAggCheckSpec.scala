@@ -235,4 +235,54 @@ class NativeAggCheckSpec extends SparkSpec {
         got.forall { case (g, m) => m == truth.getOrElse(g, Seq.empty) }
     })
   }
+
+  test("native aggregates give the same rows on the sort-based fallback") {
+    import graft.plans.{KmvAgg, SigListAgg, TopKAgg}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    // The session raises the ObjectHashAggregate fallback threshold far
+    // above any spec's group count, so without this the sort-based
+    // path (hash map → sorter spill + merge) never runs under test.
+    // 40 groups over 4 partitions: every task holds many groups, and
+    // every group spans partitions.
+    val df = spark.range(2000).repartition(4)
+      .select(concat(lit("g"), col("id") % 40).as("g"),
+        (col("id") % 7).cast("int").as("seg"),
+        (col("id") % 13).cast("int").as("ord"),
+        concat(lit("v"), col("id") % 11).as("v"),
+        concat(lit("t"), col("id") % 3).as("test"),
+        concat(lit("r"), col("id") % 2).as("run"),
+        (col("id") % 5).cast("int").as("step"),
+        (col("id") * 7919 % 1000).as("rank"), col("id"))
+      .groupBy("g")
+      .agg(SigListAgg.fp(col("seg"), col("ord"), col("v")),
+        OrderedSigAgg.sig(col("ord"), col("v")),
+        TraceFingerprintAgg.fingerprint(col("test"), col("run"),
+          col("step"), col("v")),
+        TopKAgg.topK(col("rank"), col("id"), 3),
+        KmvAgg.kmv(xxhash64(col("id")), 8),
+        KeyedMinAgg.keyedMin(col("test"), col("v")))
+      .orderBy("g")
+    object Plans extends AdaptiveSparkPlanHelper
+    /** Rows, and how many tasks fell back to sort-based aggregation. */
+    def run(): (Seq[org.apache.spark.sql.Row], Long) = {
+      val q = df.select("*") // fresh QueryExecution per run
+      val rows = q.collect().toSeq
+      val fellBack = Plans.collect(q.queryExecution.executedPlan) {
+        case a: ObjectHashAggregateExec =>
+          a.metrics("numTasksFallBacked").value
+      }.sum
+      (rows, fellBack)
+    }
+    val key = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+    val saved = spark.conf.get(key)
+    val (atDefault, defaultFallbacks) = run()
+    val (sortBased, fallbacks) =
+      try { spark.conf.set(key, "1"); run() }
+      finally spark.conf.set(key, saved)
+    assert(defaultFallbacks == 0)
+    assert(fallbacks > 0, "threshold 1 did not reach the sort-based path")
+    assert(atDefault.size == 40)
+    assert(sortBased == atDefault)
+  }
 }

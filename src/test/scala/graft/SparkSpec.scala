@@ -3,19 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one JVM, forked by sbt). */
+/** Shared local session for all suites (one JVM, forked by sbt), from
+  * the same factory as every main. The warehouse is a deployment path,
+  * so it goes in as a `spark.*` system property, which SparkConf reads. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", java.nio.file.Files
-        .createTempDirectory("graft-warehouse").toString)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    System.setProperty("spark.sql.warehouse.dir",
+      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+    val s = GraftSession.batch("local[4]", 4, Some("/root/testdata/sf0.01"))
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -1,7 +1,7 @@
 #!/bin/bash
 # Executed-scale gate at an arbitrary scale factor: generate data (if
 # missing), run the full oracle gate (graft.Verify + DuckDB compare)
-# and the bench suite. Generalizes tools/sf1_gate.sh to any SF.
+# and the bench suite.
 #
 # Usage: tools/gate.sh <sfLabel> <copies>     e.g. tools/gate.sh sf1 10
 # Artifacts: data/<sfLabel>/ (generated, gitignored),
@@ -13,6 +13,17 @@
 # DuckDB's memory (measured, round 6). Knob values are recorded in the
 # correctness artifact header; bench timings only compare between runs
 # with equal knobs.
+#
+# At sf10 four declared oracles cannot run one-shot in DuckDB (the
+# nested list() aggregations and recursive closures exhaust its
+# allocator or the wall clock). Their reference implementations replay
+# the same SQL in bounded pieces; run them against this gate's Verify
+# dump after it finishes:
+#   python3 tools/q09_replay.py data/sf10 /tmp/verify_sf10 16
+#   python3 tools/q74_replay.py data/sf10 /tmp/verify_sf10 "$GRAFT_GATE_EMB_MOD"
+#   python3 tools/q89_replay.py data/sf10 /tmp/verify_sf10
+#   python3 tools/q65_sf10_replay.py    (paths fixed: data/sf10, /tmp/verify_sf10)
+# Each prints a final OK/FAIL verdict line for its query.
 set -e
 cd /root/repo
 LABEL=${1:?usage: gate.sh <sfLabel> <copies>}
